@@ -15,7 +15,12 @@ Scale notes (the plan you'd want at 100 TB):
     the UDF stages (rows are independent) and the only stage that needs
     conv_id locality is cheap window algebra.
   * Exactly ONE shuffle in the whole plan (repartition by conv_id for
-    the windows); verdicts and writes reuse that partitioning.
+    the windows); verdicts and writes reuse that partitioning. The
+    output bucket `part_bucket` is the same Murmur3 hash of conv_id the
+    shuffle uses (sources/tables.py::with_bucket) and the shuffle's
+    partition count divides `n_buckets` or is a multiple of it
+    (align_to_buckets), so every write task holds whole buckets and the
+    table has max(n_parts, n_buckets) files, not n_parts x n_buckets.
   * Filters on the final `keep` column and column pruning push into the
     parquet/Iceberg scan of downstream consumers — the annotated table
     is written with plain Spark SQL types only.
@@ -39,20 +44,17 @@ from pii_redaction_data_pipeline_spark.sources.tables import (
     with_bucket,
 )
 
-# expression budget for riding per-bucket lineage aggregates on the write
-# job's Observation (CollectMetrics evaluates them per row OUTSIDE
-# whole-stage codegen); above this, run_pipeline falls back to the
-# column-pruned re-read of the written table. Measured A/B at bench
-# scale (2M turns, 32 cores, scripts/profile_pack_lineage.py, warm
-# medians): the default 16-bucket config emits 256 expressions and the
-# observe path costs 18.4-20.4 s vs 15.3-16.2 s for the re-read — the
-# interpreted per-row aggregate eval loses to one text-free pruned scan
-# well before the codegen cliff the original 1024 budget guarded. Set
-# so only genuinely small runs (<=10 buckets at the default taxonomy,
-# where the per-row cost is a wash and skipping the second job's
-# scheduling latency wins) ride the observation; everything larger
-# re-reads.
-LINEAGE_OBS_MAX_EXPRS = 160
+
+def align_to_buckets(n_parts: int, n_buckets: int) -> int:
+    """Round a conv_id exchange's partition count so it divides
+    `n_buckets` (the smallest divisor >= n_parts) or, above `n_buckets`,
+    is a multiple of it (the next one up). Both the exchange and
+    `part_bucket` are pmod(Murmur3(conv_id), n), so with either relation
+    each exchange partition holds whole buckets:
+    max(1, n_buckets / n_parts) of them, or a slice of exactly one."""
+    if n_parts <= n_buckets:
+        return next(d for d in range(n_parts, n_buckets + 1) if n_buckets % d == 0)
+    return -(-n_parts // n_buckets) * n_buckets
 
 
 def tune_shuffle_partitions(
@@ -256,7 +258,12 @@ def annotate(
             df = df.withColumn(
                 "_scrubbed", F.when(F.col("_scrubbed") != text, F.col("_scrubbed"))
             )
-        df = df.repartition(n_parts, "conv_id") if n_parts else df.repartition("conv_id")
+        if n_parts:
+            # sized to the output buckets so the write needs no second
+            # shuffle to emit one file per bucket per task
+            df = df.repartition(align_to_buckets(n_parts, cfg.n_buckets), "conv_id")
+        else:
+            df = df.repartition("conv_id")
         df = with_conversation_flags(
             df, tool_loop_min_run=cfg.tool_loop_min_run, hash_col="_th"
         )
@@ -465,109 +472,29 @@ def run_pipeline(
     # scope by run_id, not by directory
     ann = ann.withColumn("run_id", F.lit(run_id))
 
-    # run-level totals AND per-bucket lineage metrics ride ALONG the
-    # write job via the Observation API — no second pass over the data.
-    # The per-bucket aggregates are conditional sums over the fixed
-    # taxonomies (one expression per bucket x {rows, reason, pii type});
-    # the write job that commits the rows is the same job that counts
-    # them, so the observed values equal what was durably persisted
-    # (dynamic overwrite replaces every touched bucket with exactly this
-    # run's rows). Guarded by an expression budget: at production bucket
-    # counts (e.g. 4096 buckets at 100 TB) the expression list would
-    # leave whole-stage codegen, so large runs fall back to the original
-    # column-pruned re-read of the written table — one cheap scan that
-    # never decodes text.
+    # run-level totals ride ALONG the write job via the Observation API
+    # (three aggregates, no second pass); the per-bucket lineage rows
+    # come from one column-pruned re-read of the written table — a scan
+    # of max(n_parts, n_buckets) files that never decodes text — so they
+    # count what was durably persisted, not what the plan meant to write.
     from pyspark.sql import Observation
 
-    from pii_redaction_data_pipeline_spark.config import DROP_REASONS
-    from pii_redaction_data_pipeline_spark.functions.scrub import PII_TYPES
-    from pii_redaction_data_pipeline_spark.sources.lineage import LINEAGE_SCHEMA
-
-    obs_aggs = [
+    obs = Observation(f"pipeline-{run_id}")
+    ann = ann.observe(
+        obs,
         F.count(F.lit(1)).alias("rows_in"),
         F.sum(F.col("keep").cast("long")).alias("rows_out"),
         F.sum(F.size(F.map_values(F.coalesce(
             F.col("scrub_counts"), F.create_map())))).alias("pii_types_hit"),
-    ]
-    obs_metrics = (
-        len(todo) * (2 + len(DROP_REASONS) + len(PII_TYPES))
-        <= LINEAGE_OBS_MAX_EXPRS
     )
-    helper_cols: list[str] = []
-    if obs_metrics:
-        # per-row primitives computed ONCE as helper columns (projected
-        # away again right after the observe node) — the naive
-        # formulation re-evaluated array_contains/element_at inside
-        # every bucket's conditional, i.e. n_buckets x per row
-        reasons = F.coalesce("drop_reasons", F.array().cast("array<string>"))
-        scrubs = F.coalesce(
-            "scrub_counts", F.create_map().cast("map<string,int>")
-        )
-        helpers: dict[str, F.Column] = {"_lm_keep": F.col("keep").cast("long")}
-        for r in DROP_REASONS:
-            helpers[f"_lm_r_{r}"] = F.array_contains(reasons, r).cast("long")
-        for t in PII_TYPES:
-            helpers[f"_lm_s_{t}"] = F.coalesce(
-                F.element_at(scrubs, F.lit(t)), F.lit(0)
-            ).cast("long")
-        ann = ann.withColumns(helpers)
-        helper_cols = list(helpers)
-        zero = F.lit(0).cast("long")
-        for b in todo:
-            cond = F.col(BUCKET_COL) == b
-            obs_aggs.append(F.sum(
-                F.when(cond, F.lit(1).cast("long")).otherwise(zero)
-            ).alias(f"_b{b}_in"))
-            obs_aggs.append(F.sum(
-                F.when(cond, F.col("_lm_keep")).otherwise(zero)
-            ).alias(f"_b{b}_out"))
-            for r in DROP_REASONS:
-                obs_aggs.append(F.sum(
-                    F.when(cond, F.col(f"_lm_r_{r}")).otherwise(zero)
-                ).alias(f"_b{b}_r_{r}"))
-            for t in PII_TYPES:
-                obs_aggs.append(F.sum(
-                    F.when(cond, F.col(f"_lm_s_{t}")).otherwise(zero)
-                ).alias(f"_b{b}_s_{t}"))
-
-    obs = Observation(f"pipeline-{run_id}")
-    ann = ann.observe(obs, *obs_aggs)
-    if helper_cols:
-        ann = ann.drop(*helper_cols)
     io.write_bucketed(ann, output_path)
-    vals = dict(obs.get)
-    run_totals = {k: vals[k] for k in ("rows_in", "rows_out", "pii_types_hit")}
+    run_totals = dict(obs.get)
 
-    if obs_metrics:
-        # assemble the LINEAGE_SCHEMA rows driver-side from the observed
-        # longs — same shape as lineage_metrics: maps in sorted key
-        # order, zero counts dropped, all-zero maps NULL
-        seq = int(time.time() * 1000)
-        rows = []
-        for b in todo:
-            rmap = {
-                r: int(vals[f"_b{b}_r_{r}"] or 0)
-                for r in sorted(DROP_REASONS)
-                if (vals[f"_b{b}_r_{r}"] or 0) > 0
-            } or None
-            smap = {
-                t: int(vals[f"_b{b}_s_{t}"] or 0)
-                for t in sorted(PII_TYPES)
-                if (vals[f"_b{b}_s_{t}"] or 0) > 0
-            } or None
-            rows.append((
-                run_id, str(b), int(vals[f"_b{b}_in"] or 0),
-                int(vals[f"_b{b}_out"] or 0), rmap, smap, "complete", seq,
-            ))
-        metrics = spark.createDataFrame(rows, LINEAGE_SCHEMA)
-    else:
-        out = spark.read.parquet(output_path)
-        if "run_id" not in out.columns:  # pre-run_id-column files (migration)
-            out = out.withColumn("run_id", F.lit(run_id))
-        out = out.filter(
-            F.col(BUCKET_COL).isin(todo) & (F.col("run_id") == run_id)
-        )
-        metrics = lineage_metrics(out, run_id, buckets=todo)
+    out = spark.read.parquet(output_path)
+    if "run_id" not in out.columns:  # pre-run_id-column files (migration)
+        out = out.withColumn("run_id", F.lit(run_id))
+    out = out.filter(F.col(BUCKET_COL).isin(todo) & (F.col("run_id") == run_id))
+    metrics = lineage_metrics(out, run_id, buckets=todo)
     lineage.append(metrics)
 
     if fail_after_buckets is not None:

@@ -13,6 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's MemTotal, capped at 48g — so the default heap can
+    never exceed the machine (the OOM-killer strikes before Spark would
+    spill). Without a readable meminfo the cap alone applies."""
+    cap_mb = 48 * 1024
+    try:
+        with open(meminfo) as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{cap_mb}m"
+    return f"{max(1, min(kib // 2048, cap_mb))}m"
+
+
 def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
@@ -43,13 +56,16 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # task-side (parallel) file commit: the default v1 renames every
         # output file serially on the driver during commitJob — with
-        # partitionBy(bucket) writes producing tasks x buckets files,
+        # partitionBy(bucket) writes producing max(tasks, buckets) files,
         # that serial tail grows WITH parallelism. v2's tradeoff
         # (partial files visible on job failure) is safe here: the
         # lineage checkpoint only marks buckets complete after the job

@@ -163,13 +163,14 @@ def compact_parquet(
     # group — and (b) would REWRITE the directory as bucket=1, renaming
     # the partition out from under readers. Strings round-trip the path
     # segments exactly; downstream readers re-infer their own types.
+    # The set, the read and the count sit INSIDE the try, so `finally`
+    # restores the session's setting even when the read or count fails.
     inf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
     inf_old = spark.conf.get(inf_key)
-    spark.conf.set(inf_key, "false")
-    df = spark.read.parquet(path)
-    rows_before = df.count()
-
     try:
+        spark.conf.set(inf_key, "false")
+        df = spark.read.parquet(path)
+        rows_before = df.count()
         if partition_cols:
             # Size each partition DIRECTORY independently from the file
             # listing (no data scan): partition value p gets

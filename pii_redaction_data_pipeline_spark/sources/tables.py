@@ -30,8 +30,37 @@ def iceberg_available(spark: SparkSession) -> bool:
 
 
 def with_bucket(df: DataFrame, n_buckets: int, key: str = "conv_id") -> DataFrame:
+    """Stamp `part_bucket = pmod(hash(key), n_buckets)`.
+
+    `F.hash` is Murmur3 with seed 42 — the expression Spark's
+    HashPartitioning uses for a `repartition(n, key)` exchange and for
+    `bucketBy`. So the annotate plan's conv_id shuffle, sized to divide
+    or be a multiple of `n_buckets` (plans.pipeline.align_to_buckets),
+    already groups rows by output bucket: each write task holds whole
+    buckets and the table gets max(n_parts, n_buckets) files instead of
+    n_parts x n_buckets. It also makes `part_bucket` equal the bucket id
+    of a table written by `TableIO.write_conv_bucketed_table`.
+
+    The assignment changed from xxhash64 to Murmur3: a run_id left
+    partially complete by an older version cannot be resumed (its
+    completed buckets hold different conversations) — restart it under
+    a new run_id."""
     return df.withColumn(
-        BUCKET_COL, F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+        BUCKET_COL, F.pmod(F.hash(F.col(key)), F.lit(n_buckets)).cast("int")
+    )
+
+
+def _unprobeable(exc: Exception) -> bool:
+    """Did resolving a path's FileSystem fail because the path cannot be
+    probed at all (unknown scheme, malformed URI), as opposed to an IO
+    error on a path that can?"""
+    from pyspark.errors import IllegalArgumentException
+
+    if isinstance(exc, IllegalArgumentException):
+        return True
+    jexc = getattr(exc, "java_exception", None)
+    return jexc is not None and jexc.getClass().getName() == (
+        "org.apache.hadoop.fs.UnsupportedFileSystemException"
     )
 
 
@@ -59,20 +88,28 @@ class TableIO:
         """Is `path` an Iceberg target? Catalog identifiers (no '/')
         always are; a filesystem path is decided by the table-format
         marker — the `metadata` directory — probed through the Hadoop
-        FS (a driver-side existence check, no scan). An unprobeable
-        path falls back to the plain-parquet read, whose own error
-        surfaces the real problem."""
+        FS (a driver-side existence check, no scan).
+
+        Only an UNPROBEABLE path — no JVM gateway to probe with (Spark
+        Connect), no FileSystem for its scheme, or a malformed URI —
+        falls back to the plain-parquet read, whose own error surfaces
+        the real problem. Any other FS error (permissions, a transient
+        network failure) propagates: guessing 'not Iceberg' there would
+        re-scan an Iceberg location as raw parquet and return deleted
+        and superseded rows from all snapshots."""
         if "/" not in path:
             return True
-        try:
-            from pii_redaction_data_pipeline_spark.sources.fsutil import (
-                hadoop_fs,
-            )
-
-            _, fs, p = hadoop_fs(self.spark, path.rstrip("/") + "/metadata")
-            return bool(fs.exists(p))
-        except Exception:
+        if not hasattr(self.spark, "_jvm"):
             return False
+        from pii_redaction_data_pipeline_spark.sources import fsutil
+
+        try:
+            _, fs, p = fsutil.hadoop_fs(self.spark, path.rstrip("/") + "/metadata")
+        except Exception as e:
+            if _unprobeable(e):
+                return False
+            raise
+        return bool(fs.exists(p))
 
     def write_bucketed(self, df: DataFrame, path: str, overwrite_partitions: bool = True):
         """Write partitioned by part_bucket. overwrite_partitions=True

@@ -1,6 +1,5 @@
-"""One-off profile: (a) pack stage split — placement vs materializer vs
-write; (b) run_pipeline lineage metrics A/B — observe-riding conditional
-aggs vs column-pruned re-read — interleaved in ONE warmed session.
+"""One-off profile: pack stage split — placement vs materializer vs
+write — interleaved in ONE warmed session.
 
 Usage: python scripts/profile_pack_lineage.py [cores] [rounds]
 """
@@ -17,12 +16,10 @@ import bench
 from pyspark.sql import functions as F
 
 from pii_redaction_data_pipeline_spark import get_spark
-from pii_redaction_data_pipeline_spark.config import PipelineConfig
 from pii_redaction_data_pipeline_spark.operators.packing import (
     pack_sequences,
     with_pack_placement,
 )
-from pii_redaction_data_pipeline_spark.plans import pipeline as P
 
 cores = int(sys.argv[1]) if len(sys.argv) > 1 else 32
 rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 2
@@ -73,40 +70,9 @@ def pack_nowrite():
     packed.select(F.sum("n_tokens")).collect()
 
 
-cfg = PipelineConfig()
-import dataclasses
-
-cfg_noraw = dataclasses.replace(cfg, retain_original_text=False)
-
-
-def rp(tag, force_reread):
-    shutil.rmtree(f"{work}/rp-{tag}", ignore_errors=True)
-    shutil.rmtree(f"{work}/rp-{tag}-lin", ignore_errors=True)
-    prev = P.LINEAGE_OBS_MAX_EXPRS if hasattr(P, "LINEAGE_OBS_MAX_EXPRS") else None
-    if prev is not None:
-        # force the arm under test: the default 16-bucket config emits
-        # 16*(2+8+6)=256 observe exprs, over the production budget (160),
-        # so WITHOUT raising the cap both arms would silently measure the
-        # re-read path and the A/B is meaningless.
-        P.LINEAGE_OBS_MAX_EXPRS = 0 if force_reread else 10**9
-    try:
-        P.run_pipeline(
-            spark, path, f"{work}/rp-{tag}", f"{work}/rp-{tag}-lin",
-            run_id="prof", cfg=cfg_noraw,
-        )
-    finally:
-        if prev is not None:
-            P.LINEAGE_OBS_MAX_EXPRS = prev
-
-
-pre = spark.conf.get("spark.sql.shuffle.partitions")
 # warm-up
 t("warm placement", placement_only)
 for r in range(rounds):
     t(f"r{r} placement-only(window+sum)", placement_only)
     t(f"r{r} pack no-write", pack_nowrite)
     t(f"r{r} pack full(+parquet write)", pack_full)
-    t(f"r{r} run_pipeline observe-path", lambda: rp(f"obs{r}", False))
-    spark.conf.set("spark.sql.shuffle.partitions", pre)
-    t(f"r{r} run_pipeline reread-path", lambda: rp(f"rr{r}", True))
-    spark.conf.set("spark.sql.shuffle.partitions", pre)

@@ -169,3 +169,17 @@ def test_compaction_preserves_zero_padded_partition_segments(spark, tmp_path):
         spark.conf.get("spark.sql.sources.partitionColumnTypeInference.enabled")
         == "true"
     )
+
+
+def test_type_inference_restored_when_read_fails(spark, tmp_path):
+    """The rewrite disables partition-column type inference for its
+    read; a read that fails (here: a corrupt data file) must still leave
+    the session's setting as it found it."""
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    p = tmp_path / "corrupt"
+    p.mkdir()
+    (p / "part-00000.parquet").write_bytes(b"not a parquet file")
+    before = spark.conf.get(key)
+    with pytest.raises(Exception):
+        compact_parquet(spark, str(p), target_bytes=1 << 30)
+    assert spark.conf.get(key) == before

@@ -81,6 +81,63 @@ def test_tableio_falls_back_to_parquet_on_iceberg_error(monkeypatch):
         io.read("some/dir")
 
 
+class _JavaError(Exception):
+    """Stands in for a py4j Py4JJavaError: carries the Java class."""
+
+    def __init__(self, cls):
+        super().__init__(cls)
+        self.java_exception = types.SimpleNamespace(
+            getClass=lambda: types.SimpleNamespace(getName=lambda: cls)
+        )
+
+
+class _ProbingSpark(_FakeSpark):
+    _jvm = object()  # a JVM gateway exists, so the layout is probed
+
+
+def test_iceberg_layout_probe_errors_propagate(monkeypatch):
+    """Only an unprobeable path (no FileSystem for its scheme) means 'not
+    Iceberg'; any other FS failure — resolving the FileSystem or the
+    metadata-marker existence check — must surface, never fall back to
+    a raw parquet read of what may be an Iceberg table's location."""
+    import pytest
+
+    from pii_redaction_data_pipeline_spark.sources import fsutil, tables
+
+    monkeypatch.setattr(tables, "iceberg_available", lambda s: True)
+    log = []
+    io = tables.TableIO(_ProbingSpark(log))
+
+    def raising(exc):
+        def hadoop_fs(spark, path):
+            raise exc
+
+        return hadoop_fs
+
+    monkeypatch.setattr(
+        fsutil, "hadoop_fs",
+        raising(_JavaError("org.apache.hadoop.fs.UnsupportedFileSystemException")),
+    )
+    assert io.read("bogus://bucket/t") == "df:parquet:bogus://bucket/t"
+
+    monkeypatch.setattr(
+        fsutil, "hadoop_fs", raising(_JavaError("java.io.IOException"))
+    )
+    with pytest.raises(_JavaError):
+        io.read("hdfs://nn/warehouse/t")
+
+    class _FailingFS:
+        def exists(self, p):
+            raise _JavaError("org.apache.hadoop.security.AccessControlException")
+
+    monkeypatch.setattr(
+        fsutil, "hadoop_fs", lambda spark, path: (None, _FailingFS(), path)
+    )
+    with pytest.raises(_JavaError):
+        io.read("s3a://bucket/warehouse/t")
+    assert log == [("parquet", "bogus://bucket/t")]
+
+
 def test_tableio_parquet_only_without_jar(monkeypatch):
     from pii_redaction_data_pipeline_spark.sources import tables
 

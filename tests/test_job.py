@@ -261,3 +261,18 @@ def test_curate_full_cli_text_flags(tmp_path):
             ["--input", "i", "--output", "o", "--lineage", "l",
              "--drop-original-text", "--retain-original-text"]
         )
+
+
+def test_default_driver_memory_follows_host(tmp_path):
+    """Without SPARK_DRIVER_MEM the driver heap is half the host's
+    MemTotal, capped at 48g; an unreadable meminfo leaves only the cap."""
+    from pii_redaction_data_pipeline_spark.session import default_driver_memory
+
+    def host(kib):
+        p = tmp_path / f"meminfo-{kib}"
+        p.write_text(f"MemTotal:       {kib} kB\nMemFree:        1024 kB\n")
+        return str(p)
+
+    assert default_driver_memory(host(16 * 1024 * 1024)) == "8192m"
+    assert default_driver_memory(host(512 * 1024 * 1024)) == "49152m"
+    assert default_driver_memory(str(tmp_path / "missing")) == "49152m"

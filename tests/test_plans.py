@@ -9,6 +9,8 @@ import os
 import re
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
@@ -204,6 +206,84 @@ def test_bucketed_table_windows_need_no_exchange(spark, tiny, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS bktest.transcripts_b")
         spark.sql("DROP DATABASE IF EXISTS bktest")
+
+
+def test_align_to_buckets():
+    """The conv_id exchange's partition count divides n_buckets (smallest
+    divisor >= n) or, above it, rounds up to the next multiple."""
+    from pii_redaction_data_pipeline_spark.plans.pipeline import align_to_buckets
+
+    assert [align_to_buckets(n, 16) for n in (6, 8, 12, 40)] == [8, 8, 16, 48]
+
+
+@pytest.mark.parametrize("n_buckets", [4, 16])
+def test_bucketed_write_one_file_per_bucket_per_task(
+    spark, tiny, tmp_path, n_buckets
+):
+    """part_bucket is the conv_id shuffle's own Murmur3 hash, so each
+    write task holds whole buckets: every occupied (task, bucket) slot
+    is exactly one file, max(n_parts, n_buckets) files at most — not
+    one per task per bucket. part_bucket also equals the bucket id
+    Spark's bucketBy assigns (write_conv_bucketed_table)."""
+    import dataclasses
+    import glob
+
+    from pii_redaction_data_pipeline_spark.config import PipelineConfig
+    from pii_redaction_data_pipeline_spark.plans.pipeline import (
+        align_to_buckets,
+        run_pipeline,
+    )
+    from pii_redaction_data_pipeline_spark.sources.tables import TableIO
+
+    cfg = dataclasses.replace(PipelineConfig(), n_buckets=n_buckets)
+    out = str(tmp_path / "annotated")
+    run_pipeline(spark, tiny[0], out, str(tmp_path / "lineage"), cfg=cfg)
+
+    n_parts = align_to_buckets(
+        max(
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+            2 * spark.sparkContext.defaultParallelism,
+        ),
+        n_buckets,
+    )
+    n_slots = max(n_parts, n_buckets)
+    src = spark.read.parquet(tiny[0])
+    occupied = (
+        src.select(F.pmod(F.hash("conv_id"), F.lit(n_slots)).alias("s"))
+        .distinct()
+        .count()
+    )
+    files = glob.glob(os.path.join(out, "part_bucket=*", "*.parquet"))
+    assert len(files) == occupied <= n_slots
+
+    ann = spark.read.parquet(out)
+    assert ann.count() == src.count()
+    want = F.pmod(F.hash("conv_id"), F.lit(n_buckets))
+    assert ann.filter(F.col("part_bucket") != want).count() == 0
+
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS bklayout LOCATION '{tmp_path}/wh'")
+    try:
+        TableIO(spark, n_buckets=n_buckets).write_conv_bucketed_table(
+            src.select("conv_id"), "bklayout.convs", sort_within=False
+        )
+        # bucketBy writes bucket b to files named ..._<b:05d>.c000...
+        spark_bucket = (
+            spark.table("bklayout.convs")
+            .select(
+                "conv_id",
+                F.regexp_extract("_metadata.file_name", r"_(\d{5})\.c\d+", 1)
+                .cast("int")
+                .alias("b"),
+            )
+            .distinct()
+        )
+        ours = ann.select("conv_id", "part_bucket").distinct()
+        joined = spark_bucket.join(ours, "conv_id", "full")
+        assert joined.filter(~F.col("b").eqNullSafe(F.col("part_bucket"))).count() == 0
+        assert joined.count() == src.select("conv_id").distinct().count()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bklayout.convs")
+        spark.sql("DROP DATABASE IF EXISTS bklayout")
 
 
 def test_ann_and_topk_broadcast_probe_side(spark):
