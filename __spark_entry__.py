@@ -2263,6 +2263,7 @@ _NGRAM_TRUTH_SQL = r"""
     pairs AS (
         SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS inter
         FROM grams x JOIN grams y ON x.g = y.g AND x.doc_id < y.doc_id
+        WHERE x.g <> ''
         GROUP BY 1, 2)
     SELECT id_a, id_b,
            round(inter / (sa.n_sh + sb.n_sh - inter), 6) AS jaccard

@@ -194,7 +194,7 @@ def timed_median(
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     sf = _sf_of(sf_dir)
     scale = SF_TO_SCALE.get(sf, "bench")
 
@@ -285,11 +285,12 @@ def main():
     timings["pipeline_transcripts"] = pipe["wall_sec"]
 
     # FLAGSHIP at bench4x (~8M turns) by default when benching the full
-    # sf0.1 tier: the session-fixed per-job tail (measured 2.1-3.6 s by
-    # scripts/profile_tail.py) is 15-25% of a ~13 s 2M-turn wall but
-    # ~1.4% at bench4x, so the larger scale reports the ENGINE's
-    # turns/sec, not the harness tail. The 2M-turn block above stays for
-    # cross-round comparability (BENCH_r2/r3 measured it).
+    # sf0.1 tier: the session-fixed per-job tail (2.1-3.6 s, measured on
+    # the 32-vCPU host in round 5; perfbench/ traces it now) is 15-25% of
+    # a ~13 s 2M-turn wall but ~1.4% at bench4x, so the larger scale
+    # reports the ENGINE's turns/sec, not the harness tail. The 2M-turn
+    # block above stays for cross-round comparability (BENCH_r2/r3
+    # measured it).
     pipe4 = None
     if scale == "bench" and os.environ.get("BENCH_4X", "1") != "0":
         tp4 = ensure_transcripts("bench4x")

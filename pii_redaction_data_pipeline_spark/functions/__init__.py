@@ -1,3 +1,6 @@
+# imported first for its side effect: inside a Python worker it stops
+# every task from re-reading unchanged zip archives (pyspark.zip)
+from pii_redaction_data_pipeline_spark.functions import worker_zipcache  # noqa: F401
 from pii_redaction_data_pipeline_spark.functions.scrub import (
     scrub_frame,
     scrub_text_value,

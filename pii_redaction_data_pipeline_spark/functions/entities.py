@@ -133,11 +133,12 @@ def entities_frame(texts: pd.Series) -> pd.Series:
     # trigger the copy lacked would pass scrub_frame but silently fail
     # this prescan — entities and scrub_counts disagreeing with no error
     # (the parity the module docstring pins). A trigger kind this
-    # prescan cannot express (None) disables the prefilter entirely.
+    # prescan cannot express (None, or any kind outside the four below)
+    # disables the prefilter entirely instead of being skipped.
     from pii_redaction_data_pipeline_spark.functions.scrub import _TRIGGERS
 
     kinds = set(_TRIGGERS.values())
-    if None in kinds:
+    if kinds - {"digit", "@", ":", "profanity"}:
         cand = np.ones(len(s), dtype=bool)
     else:
         cand = np.zeros(len(s), dtype=bool)

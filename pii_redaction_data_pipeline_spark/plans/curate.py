@@ -67,6 +67,7 @@ from pii_redaction_data_pipeline_spark.operators.windows import (
 from pii_redaction_data_pipeline_spark.sources.lineage import (
     LINEAGE_SCHEMA,
     LineageStore,
+    local_frame,
 )
 
 STAGES = ("annotate", "conv_verdict", "conv_dedup", "sample", "pack")
@@ -386,7 +387,8 @@ def run_curation(
 
     def mark(stage: str, rows_out: int):
         lineage.append(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(run_id, f"stage:{stage}", int(rows_out), int(rows_out),
                   None, None, "complete", int(time.time() * 1000))],
                 LINEAGE_SCHEMA,

@@ -392,9 +392,13 @@ def lineage_metrics(
         tax_map("_s_", PII_TYPES).alias("scrub_counts"),
     )
     if buckets is not None:
-        spark = annotated_out.sparkSession
-        all_buckets = spark.createDataFrame(
-            [(int(b),) for b in buckets], f"{BUCKET_COL} int"
+        # a JVM range, not createDataFrame: a Python-list frame would
+        # start Python-worker tasks for this join (sources/lineage.py)
+        ids = [int(b) for b in buckets]
+        all_buckets = (
+            annotated_out.sparkSession.range(max(ids, default=-1) + 1, numPartitions=1)
+            .where(F.col("id").isin(ids))
+            .select(F.col("id").cast("int").alias(BUCKET_COL))
         )
         totals = (
             all_buckets.join(totals, BUCKET_COL, "left")

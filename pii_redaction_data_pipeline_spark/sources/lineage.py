@@ -15,6 +15,14 @@ submit more work" loop (textract-bulk.py:108-118). Appends are atomic at
 file granularity; a bucket is only trusted once its row says complete,
 so a crash mid-run re-processes at most the in-flight buckets
 (idempotent because output writes are per-bucket dynamic overwrites).
+
+Every frame this module builds from driver-side values (the empty frame
+for a missing path, the stage-boundary rows of plans/curate.py) is a JVM
+relation (`local_frame`), never `spark.createDataFrame(<python list>)`:
+in classic PySpark the latter pickles the rows into a Python RDD, so any
+action on it starts Python-worker tasks in a second worker pool (its own
+daemon plus one worker per core) — ~0.5 s wall per frame to move zero or
+one row. Only the fused annotate UDF should start Python workers.
 """
 
 from __future__ import annotations
@@ -38,6 +46,28 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A small driver-side frame built on the JVM: literal rows over
+    `spark.range(len(rows), numPartitions=1)`, each column picking its
+    value by row id out of one literal array cast to the schema's type.
+    Values must be scalars `F.lit` accepts (or None)."""
+    frame = spark.range(len(rows), numPartitions=1)
+    if not rows:
+        # LIMIT 0 plans as an empty LocalRelation (Range(0) does not), so
+        # filters and collects over it finish on the driver with no job
+        return frame.select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        ).limit(0)
+    return frame.select(
+        *[
+            F.array(*[F.lit(r[i]) for r in rows])
+            .cast(T.ArrayType(f.dataType))[F.col("id")]
+            .alias(f.name)
+            for i, f in enumerate(schema.fields)
+        ]
+    )
+
+
 class LineageStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -51,16 +81,18 @@ class LineageStore:
         # result was still an empty frame, but every miss logged a
         # FileNotFound stack trace and fired a failed-query event that
         # Spark 4's ObservationManager listener re-analyzes (driver-log
-        # noise measured once per fresh-dir DAG run)
+        # noise measured once per fresh-dir DAG run). The empty frame is a
+        # JVM relation (local_frame), so a fresh run's completed_buckets
+        # resolves on the driver without a job.
         from pii_redaction_data_pipeline_spark.sources.fsutil import hadoop_fs
 
         _, fs, jpath = hadoop_fs(self.spark, self.path)
         if not fs.exists(jpath):
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+            return local_frame(self.spark, [], LINEAGE_SCHEMA)
         try:
             return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self.path)
         except AnalysisException:  # raced away between probe and read
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+            return local_frame(self.spark, [], LINEAGE_SCHEMA)
 
     def completed_buckets(self, run_id: str) -> list[int]:
         # partition_id also carries stage-boundary rows ("stage:<name>",

@@ -186,10 +186,10 @@ def main():
             "## Why the 8 -> 32 pair cannot prove >= 0.8 on this box "
             "(round-5 decomposition)\n\n"
             "The 8 -> 32 raw cell is structurally capped below the target on\n"
-            "THIS sandbox; the round-5 `scripts/profile_tail.py` run\n"
-            "decomposes why. Fitting `wall = tail + rows/rate` from a\n"
-            "~20k-row and a ~2M-row run of the identical job in one warmed\n"
-            "session:\n\n"
+            "the round-5 32-vCPU host; a tail-fit run (since replaced by the\n"
+            "`perfbench/` traced spans) decomposes why. Fitting\n"
+            "`wall = tail + rows/rate` from a ~20k-row and a ~2M-row run\n"
+            "of the identical job in one warmed session:\n\n"
             "| level | data rate (rows/s) | session-fixed tail |\n"
             "|---|---|---|\n"
             "| local[8] | 92,677 | 1.8 s |\n"
@@ -248,7 +248,7 @@ def main():
             "## All measurement attempts, every scale (4 -> 16 pair)\n\n"
             "The `bench4x` (~8M-turn) attempts are the most representative:\n"
             "the session-fixed tail (planning/scheduling/commit — measured\n"
-            "directly at 2.1-3.6 s by scripts/profile_tail.py, absent at\n"
+            "directly at 2.1-3.6 s in round 5, absent at\n"
             "10^12-turn scale) is ~1.4% of the local[4] wall there, so the\n"
             "raw ratio converges toward what a long job on a real cluster\n"
             "sees.\n\n"

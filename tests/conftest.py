@@ -10,7 +10,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from pii_redaction_data_pipeline_spark import get_spark
 
-    s = get_spark(master="local[8]", app_name="tests")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
+    s = get_spark(master=f"local[{cpus}]", app_name="tests")
     yield s
     s.stop()
 

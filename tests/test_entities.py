@@ -92,6 +92,19 @@ def test_frame_prefilter_matches_scalar():
     assert list(ents.iloc[len(SAMPLES)]) == []
 
 
+def test_unknown_trigger_kind_disables_prefilter(monkeypatch):
+    """A trigger kind the prescan cannot express must widen it to every
+    row, never drop that pattern's rows: entities equal an unfiltered
+    per-row scan."""
+    from pii_redaction_data_pipeline_spark.functions import scrub
+
+    patched = {i: ("at-sign" if k == "@" else k) for i, k in scrub._TRIGGERS.items()}
+    assert "at-sign" in patched.values()
+    monkeypatch.setattr(scrub, "_TRIGGERS", patched)
+    ents = entities_frame(pd.Series(SAMPLES))
+    assert [list(e) for e in ents] == [extract_entities_value(t)[1] for t in SAMPLES]
+
+
 def test_pipeline_emit_entities(spark):
     from pii_redaction_data_pipeline_spark.config import PipelineConfig
     from pii_redaction_data_pipeline_spark.plans.pipeline import annotate

@@ -231,7 +231,7 @@ def test_curate_full_cli(spark, tmp_path):
     out = str(tmp_path / "curate")
     s = main([
         "--input", tp, "--output", out, "--lineage", "unused",
-        "--run-id", "cli-curate", "--master", "local[8]",
+        "--run-id", "cli-curate", "--master", spark.sparkContext.master,
         "--curate-full", "--sample-rate", "1.0",
     ])
     assert s["stages_ran"] == list(STAGES)
